@@ -13,10 +13,11 @@ implementations, cross-checked in tests:
    buffer, reference technical_indicators.py:124-130); we express it with the
    ``aggregate`` higher-order function over a bounded ``collect_list`` frame.
 
-2. **Grouped-map pandas path** (``indicators_apply_in_pandas``): one linear
-   pass per symbol via ``applyInPandas`` — the scale path for very long
-   per-symbol histories (the HOF EMA materializes an O(buffer) array per row)
-   and the exact engine used by the streaming stateful handler.
+2. **Grouped-map numpy path** (``indicators_apply_in_pandas``): one numpy
+   kernel (``indicator_arrays``) per symbol via ``applyInPandas`` — the scale
+   path for very long per-symbol histories (the HOF EMA materializes an
+   O(buffer) array per row) and the exact kernel the streaming stateful
+   handler runs.
 
 Exact reference semantics reproduced (documented quirks, SURVEY §7.3):
   * RSI uses a SIMPLE mean of the last ``period`` deltas, not Wilder
@@ -58,6 +59,14 @@ BB_PERIOD, BB_STDDEV = 20, 2.0
 MACD_FAST, MACD_SLOW, MACD_SIGNAL = 12, 26, 9
 VOL_PERIOD = 20
 TRADING_DAYS = 252
+
+# The indicator columns, in output order (every path appends these).
+IND_COLS = [
+    "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
+    "bb_upper", "bb_lower", "bb_middle",
+    "macd", "macd_signal", "macd_histogram",
+    "volatility", "price_change_percent",
+]
 
 
 @dataclass(frozen=True)
@@ -201,13 +210,7 @@ def with_indicators(df: DataFrame, spec: SeriesSpec | None = None) -> DataFrame:
     )
     # column order: keep ema_12/ema_26 in their documented slot (after sma_50)
     base = [c for c in df.columns if c != "__buf"]
-    ind_order = [
-        "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
-        "bb_upper", "bb_lower", "bb_middle",
-        "macd", "macd_signal", "macd_histogram",
-        "volatility", "price_change_percent",
-    ]
-    return out.select(*base, *ind_order)
+    return out.select(*base, *IND_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -234,8 +237,9 @@ def get_indicator(name: str) -> IndicatorBuilder:
 
 
 # ---------------------------------------------------------------------------
-# Grouped-map pandas path — linear-time per symbol; used by the streaming
-# stateful handler and as the scale path for very long histories.
+# Grouped-map path — one numpy kernel (``indicator_arrays``) over a symbol's
+# time-ordered prices, shared by ``indicator_frame`` (the applyInPandas scale
+# path for very long histories) and the streaming state handler.
 # ---------------------------------------------------------------------------
 
 
@@ -267,90 +271,86 @@ def ema_series(prices: np.ndarray, period: int, buffer: int = BUFFER_SIZE) -> np
     return out
 
 
-def indicator_frame(pdf: pd.DataFrame, spec: SeriesSpec) -> pd.DataFrame:
-    """Compute all indicators for ONE symbol's ticks (already sorted input not
-    required — sorts by (ts, tiebreak)).  Mirrors ``with_indicators`` exactly;
-    cross-checked in tests/test_indicators.py.
-    """
-    pdf = pdf.sort_values([spec.ts, spec.tiebreak], kind="mergesort").reset_index(drop=True)
-    p = pdf[spec.price].to_numpy(dtype=np.float64)
-    n = len(p)
-    idx = np.arange(1, n + 1)
-    buflen = np.minimum(idx, BUFFER_SIZE)
+_CHUNK = 1 << 18  # window elements reduced per step (2 MB of float64)
 
-    def gate(arr: np.ndarray, min_len: int) -> np.ndarray:
-        out = arr.copy()
-        out[buflen < min_len] = np.nan
-        return out
 
-    s = pd.Series(p)
-    sma20 = gate(s.rolling(SMA_FAST, min_periods=1).mean().to_numpy(), SMA_FAST)
-    sma50 = gate(s.rolling(SMA_SLOW, min_periods=1).mean().to_numpy(), SMA_SLOW)
-
-    delta = np.diff(p, prepend=np.nan)
-    gains = pd.Series(np.where(delta > 0, delta, 0.0))
-    losses = pd.Series(np.where(delta < 0, -delta, 0.0))
-    # First row's delta is undefined: exclude it from the mean like the
-    # Window version does (avg skips NULL) by not counting it.
-    gains.iloc[0] = np.nan
-    losses.iloc[0] = np.nan
-    avg_gain = gains.rolling(RSI_PERIOD, min_periods=1).mean().to_numpy()
-    avg_loss = losses.rolling(RSI_PERIOD, min_periods=1).mean().to_numpy()
-    with np.errstate(divide="ignore", invalid="ignore"):
-        rsi = np.where(
-            avg_loss == 0.0, 100.0, 100.0 - 100.0 / (1.0 + avg_gain / avg_loss)
+def _rolling(x: np.ndarray, w: int, n: int, stat: Callable[..., np.ndarray]) -> np.ndarray:
+    """``stat(window, axis=1)`` of every full ``w``-row window of ``x``,
+    right-aligned in an ``n``-row NaN array.  Each window is reduced from its
+    own elements (``np.std`` is two-pass), never from running sums, so a value
+    does not depend on how much history precedes its window: the streaming
+    handler, which keeps only the last BUFFER_SIZE prices, reproduces the
+    batch result.  Chunking bounds the temporaries on long histories."""
+    out = np.full(n, np.nan)
+    if len(x) >= w:
+        win = np.lib.stride_tricks.sliding_window_view(x, w)
+        step = max(1, _CHUNK // w)
+        out[n - len(win):] = np.concatenate(
+            [stat(win[i : i + step], axis=1) for i in range(0, len(win), step)]
         )
-    rsi = gate(rsi, RSI_PERIOD + 1)
-
-    bb_mid = s.rolling(BB_PERIOD, min_periods=1).mean().to_numpy()
-    bb_std = s.rolling(BB_PERIOD, min_periods=1).std(ddof=0).to_numpy()
-    bb_upper = gate(bb_mid + BB_STDDEV * bb_std, BB_PERIOD)
-    bb_lower = gate(bb_mid - BB_STDDEV * bb_std, BB_PERIOD)
-    bb_middle = gate(bb_mid, BB_PERIOD)
-
-    ema12 = gate(ema_series(p, EMA_FAST), EMA_FAST)
-    ema26 = gate(ema_series(p, EMA_SLOW), EMA_SLOW)
-    macd = gate(ema_series(p, MACD_FAST) - ema_series(p, MACD_SLOW), MACD_SLOW + MACD_SIGNAL)
-
-    prev = np.concatenate([[np.nan], p[:-1]])
-    rets = pd.Series((p - prev) / prev)
-    vol = rets.rolling(BUFFER_SIZE - 1, min_periods=1).std(ddof=0).to_numpy() * math.sqrt(
-        TRADING_DAYS
-    )
-    vol = gate(vol, VOL_PERIOD + 1)
-
-    pct = (p - prev) / prev * 100.0
-
-    out = pdf.copy()
-    out["rsi_14"] = rsi
-    out["sma_20"] = sma20
-    out["sma_50"] = sma50
-    out["ema_12"] = ema12
-    out["ema_26"] = ema26
-    out["bb_upper"] = bb_upper
-    out["bb_lower"] = bb_lower
-    out["bb_middle"] = bb_middle
-    out["macd"] = macd
-    out["macd_signal"] = macd
-    out["macd_histogram"] = np.where(np.isnan(macd), np.nan, 0.0)
-    out["volatility"] = vol
-    out["price_change_percent"] = pct
     return out
 
 
+def indicator_arrays(p: np.ndarray) -> dict[str, np.ndarray]:
+    """The ``IND_COLS`` of one symbol's time-ordered prices, one value per row
+    and NaN under each indicator's gate — ``with_indicators`` in numpy."""
+    n = len(p)
+    prev = np.concatenate(([np.nan], p[:-1]))
+    delta = p - prev
+    rets = delta / prev
+    d = delta[1:]
+    avg_gain = _rolling(np.where(d > 0, d, 0.0), RSI_PERIOD, n, np.mean)
+    avg_loss = _rolling(np.where(d < 0, -d, 0.0), RSI_PERIOD, n, np.mean)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        rsi = np.where(avg_loss == 0.0, 100.0, 100.0 - 100.0 / (1.0 + avg_gain / avg_loss))
+    bb_mid = _rolling(p, BB_PERIOD, n, np.mean)
+    bb_std = _rolling(p, BB_PERIOD, n, np.std)
+
+    # Volatility: std of the (up to BUFFER_SIZE-1) returns the buffer holds.
+    # Full buffers are ordinary windows; before that the window is the whole
+    # history, so prefix sums serve — shifted by the first return, which lies
+    # inside every prefix, to avoid cancellation.
+    vol = _rolling(rets[1:], BUFFER_SIZE - 1, n, np.std)
+    head = min(n, BUFFER_SIZE - 1)
+    if head > 1:
+        r = rets[1:head] - rets[1]
+        k = np.arange(1, head)
+        var = np.cumsum(r * r) / k - (np.cumsum(r) / k) ** 2
+        vol[1:head] = np.sqrt(np.maximum(var, 0.0))
+    vol *= math.sqrt(TRADING_DAYS)
+    vol[:VOL_PERIOD] = np.nan
+
+    ema12 = ema_series(p, EMA_FAST)
+    ema26 = ema_series(p, EMA_SLOW)
+    macd = ema12 - ema26  # MACD_FAST/MACD_SLOW are the EMA periods
+    macd[: MACD_SLOW + MACD_SIGNAL - 1] = np.nan
+    return dict(zip(IND_COLS, (
+        rsi, _rolling(p, SMA_FAST, n, np.mean), _rolling(p, SMA_SLOW, n, np.mean),
+        ema12, ema26,
+        bb_mid + BB_STDDEV * bb_std, bb_mid - BB_STDDEV * bb_std, bb_mid,
+        macd, macd.copy(), np.where(np.isnan(macd), np.nan, 0.0),
+        vol, rets * 100.0,
+    )))
+
+
+def indicator_frame(pdf: pd.DataFrame, spec: SeriesSpec) -> pd.DataFrame:
+    """All indicators for ONE symbol's ticks, in any row order: the rows
+    sorted by (ts, tiebreak) with ``IND_COLS`` appended.  Mirrors
+    ``with_indicators`` exactly; cross-checked in tests/test_indicators.py.
+    """
+    order = np.lexsort((pdf[spec.tiebreak].to_numpy(), pdf[spec.ts].to_numpy()))
+    cols = {c: pdf[c].array[order] for c in pdf.columns}
+    cols.update(indicator_arrays(pdf[spec.price].to_numpy(np.float64)[order]))
+    return pd.DataFrame(cols, copy=False)
+
+
 def indicators_apply_in_pandas(df: DataFrame, spec: SeriesSpec | None = None) -> DataFrame:
-    """Scale-path indicator computation: one Arrow batch per symbol, linear
-    time, no O(buffer) per-row arrays.  Output schema = input + indicator
-    doubles (same names as ``with_indicators``)."""
+    """Scale-path indicator computation: one Arrow batch per symbol through
+    ``indicator_arrays``, no O(buffer) per-row arrays.  Output schema = input
+    + indicator doubles (same names as ``with_indicators``)."""
     spec = spec or SeriesSpec()
-    added = [
-        "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
-        "bb_upper", "bb_lower", "bb_middle",
-        "macd", "macd_signal", "macd_histogram",
-        "volatility", "price_change_percent",
-    ]
     schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-    schema_parts += [f"`{c}` double" for c in added]
+    schema_parts += [f"`{c}` double" for c in IND_COLS]
     out_schema = ", ".join(schema_parts)
     # Pin the shuffle width: the grouped-map stage is CPU-bound per GROUP,
     # but its input is small in BYTES, so AQE would coalesce it to 2-3

@@ -1320,8 +1320,9 @@ def emb5_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Flagship (entry): full analytics row — dims ⋈ ticks + all indicators.
-# Uses the linear-time grouped-map pandas path (the scale default); the
-# JVM-HOF path stays the oracle-parity twin (w_all_indicators).
+# Uses the grouped-map numpy kernel (the scale default, shared with the
+# streaming state handler); the JVM-HOF path stays the oracle-parity twin
+# (w_all_indicators).
 # ---------------------------------------------------------------------------
 
 
@@ -1330,10 +1331,11 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-symbol indicator windows → broadcast-join dims → latest 1000 rows
     (analytics/analytics_consumer.py:304-420 + dashboard fetch)."""
     ticks = ticks_from_events(spark, sf_dir).filter(valid_tick_predicate())
-    # Linear pandas path: the HOF-EMA twin materializes an O(BUFFER) array
+    # Grouped-map kernel: the HOF-EMA twin materializes an O(BUFFER) array
     # per row (fine at small SF, the memory hot spot at long histories); the
-    # grouped map is one Arrow batch per symbol, O(n) per symbol, and is
-    # cross-checked against the HOF path in tests/test_indicators.py.
+    # grouped map is one Arrow batch per symbol through one numpy kernel
+    # (sliding-window views, no per-row arrays), and is cross-checked
+    # against the HOF path in tests/test_indicators.py.
     enriched = ind.indicators_apply_in_pandas(ticks, TICK_SPEC)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("company_id"),

@@ -13,11 +13,13 @@ Dataflow:
                                      ↘ alert filter (T6) → alert sink
                                      ↘ invalid rows → error sink (T8)
 
-The state handler reuses ``operators.indicators.indicator_frame`` — the same
-math as the batch paths, so a stream replayed as a batch produces identical
-values (tested in tests/test_streaming.py).  Each micro-batch appends the
-new ticks to the buffered prices, computes indicators over the combined
-series, emits only the new rows, and truncates state back to 1000.
+The state handler runs ``operators.indicators.indicator_arrays`` — the numpy
+kernel behind the batch path's ``indicator_frame`` — so a stream replayed as
+a batch produces identical values (tested in tests/test_streaming.py and,
+past the 1000-price buffer, tests/test_state_handler.py).  Each micro-batch
+sorts the new ticks, appends their prices to the buffered ones, runs the
+kernel over that array, emits only the new rows, and truncates state back
+to 1000 prices.
 """
 
 from __future__ import annotations
@@ -25,20 +27,14 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.indicators import BUFFER_SIZE, SeriesSpec, indicator_frame
+from ..operators.indicators import BUFFER_SIZE, IND_COLS, indicator_arrays
 from ..operators.relational import valid_tick_predicate
-
-IND_COLS = [
-    "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
-    "bb_upper", "bb_lower", "bb_middle",
-    "macd", "macd_signal", "macd_histogram",
-    "volatility", "price_change_percent",
-]
 
 STATE_SCHEMA = "prices array<double>, n_seen long"
 
@@ -48,47 +44,33 @@ OUT_SCHEMA = (
     + ", ".join(f"{c} double" for c in IND_COLS)
 )
 
-_SPEC = SeriesSpec(key="company_id", ts="trade_datetime",
-                   tiebreak="tick_id", price="current_price")
-
 
 def _update_symbol(
     key: tuple[Any, ...],
     batches: Iterable[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """State handler for one symbol: append → recompute tail → truncate."""
-    new = pd.concat(list(batches), ignore_index=True)
-    new = new.sort_values(["trade_datetime", "tick_id"], kind="mergesort")
-
-    prices_prev, n_seen = state.get if state.exists else ([], 0)
-    prior = pd.DataFrame(
-        {
-            "company_id": key[0],
-            "tick_id": -1,
-            "trade_datetime": pd.Timestamp(0),
-            "current_price": list(prices_prev),
-            "volume": 0,
-        }
-    ) if len(prices_prev) else None
-
-    # Combined series = buffered history + this batch, in arrival order.
-    # indicator_frame sorts by (ts, tiebreak); buffered rows use the epoch
-    # sentinel so they stay ahead of any real tick.  (prior is None when the
-    # state is empty — avoids pandas' all-NA concat deprecation.)
-    if prior is not None:
-        prior = prior.astype(new.dtypes.to_dict(), errors="ignore")
-        combined = pd.concat([prior, new], ignore_index=True)
-    else:
-        combined = new
-    out = indicator_frame(combined, _SPEC)
-    emitted = out.iloc[len(prices_prev):][
-        ["company_id", "tick_id", "trade_datetime", "current_price", "volume"] + IND_COLS
-    ]
-
-    prices_all = list(prices_prev) + new["current_price"].astype(float).tolist()
-    state.update((prices_all[-BUFFER_SIZE:], n_seen + len(new)))
-    yield emitted
+    """State handler for one symbol, on arrays: sort the new ticks by
+    (trade_datetime, tick_id), run ``indicator_arrays`` over the buffered
+    prices followed by theirs, emit the new rows, and keep the last
+    ``BUFFER_SIZE`` prices.  Every kernel window depends only on its own
+    prices, so the emitted rows equal ``indicator_frame`` over the symbol's
+    whole history (tests/test_state_handler.py)."""
+    chunks = list(batches)
+    new = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    order = np.lexsort((new["tick_id"].to_numpy(), new["trade_datetime"].to_numpy()))
+    prices_prev, n_seen = state.get if state.exists else ((), 0)
+    k = len(prices_prev)
+    prices = np.concatenate((
+        np.asarray(prices_prev, dtype=np.float64),
+        new["current_price"].to_numpy(np.float64)[order],
+    ))
+    cols = {c: new[c].array[order] for c in ("company_id", "tick_id", "trade_datetime")}
+    cols["current_price"] = prices[k:]
+    cols["volume"] = new["volume"].array[order]
+    cols.update((c, v[k:]) for c, v in indicator_arrays(prices).items())
+    state.update((prices[-BUFFER_SIZE:].tolist(), n_seen + len(new)))
+    yield pd.DataFrame(cols, copy=False)
 
 
 def observed(ticks: DataFrame, observer: Any = "tick_metrics") -> DataFrame:

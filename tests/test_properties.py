@@ -14,6 +14,8 @@ from hypothesis import strategies as st
 
 from real_time_stock_market_data_pipeline_spark.operators import indicators as ind
 
+IND_COLS = ind.IND_COLS
+
 prices_strategy = st.lists(
     st.floats(min_value=0.01, max_value=10_000.0,
               allow_nan=False, allow_infinity=False),
@@ -22,32 +24,56 @@ prices_strategy = st.lists(
 )
 
 
-def _numpy_reference(prices: list[float]) -> pd.DataFrame:
-    """Straight transcription of reference technical_indicators.py math."""
+def _ema_loop(buf: np.ndarray, period: int) -> float:
+    """Reference EMA: seeded at the buffer's first price, recursed over all
+    of it (technical_indicators.py:124-130)."""
+    m = 2.0 / (period + 1)
+    acc = buf[0]
+    for x in buf[1:]:
+        acc = x * m + acc * (1 - m)
+    return acc
+
+
+def _numpy_reference(prices: list[float], rows=None) -> pd.DataFrame:
+    """Straight transcription of reference technical_indicators.py math, one
+    row at a time over the visible buffer (every row, or just ``rows``)."""
     out = []
-    for i in range(len(prices)):
+    for i in range(len(prices)) if rows is None else rows:
         buf = np.array(prices[max(0, i - ind.BUFFER_SIZE + 1) : i + 1])
-        row = {}
-        # SMA20 (null under period)
-        row["sma_20"] = float(np.mean(buf[-20:])) if len(buf) >= 20 else None
+        row = dict.fromkeys(IND_COLS)
+        # SMA20/50 and Bollinger(20, 2σ, population std): null under period
+        if len(buf) >= 20:
+            row["sma_20"] = row["bb_middle"] = float(np.mean(buf[-20:]))
+            row["bb_upper"] = row["sma_20"] + 2.0 * float(np.std(buf[-20:]))
+            row["bb_lower"] = row["sma_20"] - 2.0 * float(np.std(buf[-20:]))
+        if len(buf) >= 50:
+            row["sma_50"] = float(np.mean(buf[-50:]))
         # RSI simple-mean, 100 when no losses
         if len(buf) >= 15:
             deltas = np.diff(buf)[-14:]
             gains = np.mean(np.where(deltas > 0, deltas, 0.0))
             losses = np.mean(np.where(deltas < 0, -deltas, 0.0))
             row["rsi_14"] = 100.0 if losses == 0 else 100.0 - 100.0 / (1 + gains / losses)
-        else:
-            row["rsi_14"] = None
+        # EMAs over the whole buffer; MACD = EMA12 - EMA26 from 35 rows on,
+        # signal = line, histogram 0 (technical_indicators.py:160-180)
+        if len(buf) >= 12:
+            row["ema_12"] = _ema_loop(buf, 12)
+        if len(buf) >= 26:
+            row["ema_26"] = _ema_loop(buf, 26)
+        if len(buf) >= 35:
+            row["macd"] = row["macd_signal"] = row["ema_12"] - row["ema_26"]
+            row["macd_histogram"] = 0.0
         # volatility: population std of ALL buffer returns, annualized.
         # Gate is period+1 = 21 (reference validate_data(prices, period+1),
         # technical_indicators.py:190-191) — NOT 22.
         if len(buf) >= 21:
             rets = np.diff(buf) / buf[:-1]
             row["volatility"] = float(np.std(rets) * math.sqrt(252))
-        else:
-            row["volatility"] = None
+        # price change over the last two ticks (analytics_consumer.py:386-390)
+        if i >= 1:
+            row["price_change_percent"] = (prices[i] - prices[i - 1]) / prices[i - 1] * 100.0
         out.append(row)
-    return pd.DataFrame(out)
+    return pd.DataFrame(out, columns=IND_COLS)
 
 
 @settings(max_examples=25, deadline=None)
@@ -65,7 +91,7 @@ def test_pandas_indicator_path_matches_numpy_reference(prices):
     spec = ind.SeriesSpec()
     got = ind.indicator_frame(pdf, spec)
     want = _numpy_reference(prices)
-    for col in ["sma_20", "rsi_14", "volatility"]:
+    for col in IND_COLS:
         g = got[col].to_numpy(dtype=float)
         w = want[col].to_numpy(dtype=float)
         assert np.allclose(g, w, rtol=1e-9, atol=1e-9, equal_nan=True), col
@@ -98,12 +124,7 @@ def _ema_loop_over_deque(prices: np.ndarray, period: int, i: int,
                          buffer: int = ind.BUFFER_SIZE) -> float:
     """Reference EMA at row i: seeded recursion over the VISIBLE deque
     (last `buffer` prices), technical_indicators.py:124-130."""
-    buf = prices[max(0, i - buffer + 1) : i + 1]
-    m = 2.0 / (period + 1)
-    acc = buf[0]
-    for x in buf[1:]:
-        acc = x * m + acc * (1 - m)
-    return acc
+    return _ema_loop(prices[max(0, i - buffer + 1) : i + 1], period)
 
 
 @settings(max_examples=5, deadline=None)
@@ -126,10 +147,10 @@ def test_ema_buffer_saturation_past_1000_rows(seed):
 @given(st.integers(min_value=0, max_value=2**31 - 1))
 def test_indicator_frame_past_buffer_saturation(seed):
     """indicator_frame vs the straight reference transcription on a series
-    LONGER than the 1000-row deque: SMA/RSI window semantics are unaffected,
-    but volatility's return window and the EMA weighted-sum fast path both
-    switch behavior at saturation — they must keep matching the visible
-    buffer's math."""
+    LONGER than the 1000-row deque, all 13 columns on the last 30 rows:
+    SMA/RSI/Bollinger window semantics are unaffected, but volatility's
+    return window and the EMA weighted-sum fast path both switch behavior at
+    saturation — they must keep matching the visible buffer's math."""
     rng = np.random.default_rng(seed)
     n = 1000 + int(rng.integers(10, 50))
     prices = list(100.0 + np.cumsum(rng.normal(0, 1, n)))
@@ -143,10 +164,10 @@ def test_indicator_frame_past_buffer_saturation(seed):
         }
     )
     got = ind.indicator_frame(pdf, ind.SeriesSpec())
-    want = _numpy_reference(prices)
-    for col in ["sma_20", "rsi_14", "volatility"]:
+    want = _numpy_reference(prices, rows=range(n - 30, n))
+    for col in IND_COLS:
         g = got[col].to_numpy(dtype=float)[-30:]
-        w = want[col].to_numpy(dtype=float)[-30:]
+        w = want[col].to_numpy(dtype=float)
         assert np.allclose(g, w, rtol=1e-9, atol=1e-9, equal_nan=True), col
 
 
